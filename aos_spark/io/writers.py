@@ -17,24 +17,15 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-VIEW_PARTITION_COLS = ["country", "track_id", "forecast_compact", "wind_threshold"]
+def write_view(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """Partitioned, dynamically-overwritten parquet write — the idiomatic
+    replacement for the reference's prefix-delete + rewrite (F9). Requires
+    spark.sql.sources.partitionOverwriteMode=dynamic (set in session.py).
 
-
-def write_view(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-    fmt: str = "parquet",
-) -> None:
-    """Partitioned, dynamically-overwritten write — the idiomatic replacement
-    for the reference's prefix-delete + rewrite (F9). Requires
-    spark.sql.sources.partitionOverwriteMode=dynamic (set in session.py)."""
-    cols = partition_cols if partition_cols is not None else VIEW_PARTITION_COLS
-    cols = [c for c in cols if c in df.columns]
-    writer = df.write.mode("overwrite").format(fmt)
-    if cols:
-        writer = writer.partitionBy(*cols)
-    writer.save(path)
+    A partition column missing from ``df`` raises before anything is
+    written: an unpartitioned overwrite would replace the whole dataset
+    (every other storm's views included)."""
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed(

@@ -23,6 +23,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def point_within_box_buffer(px: F.Column, py: F.Column, buffer: float) -> F.Column:
+    """True where the point (px, py) lies within Euclidean distance
+    ``buffer`` of the box (xmin, xmax, ymin, ymax) — a point buffered by a
+    DISC, as the reference's gpd .buffer() is. A per-axis expansion would
+    test the Chebyshev square and count points in the corner lune (box
+    distance in (r, r·√2]) as false positives. Exact point-to-box distance,
+    squared on both sides so no sqrt enters the cross-engine-exact
+    predicate."""
+    dx = F.greatest(F.col("xmin") - px, px - F.col("xmax"), F.lit(0.0))
+    dy = F.greatest(F.col("ymin") - py, py - F.col("ymax"), F.lit(0.0))
+    return dx * dx + dy * dy <= F.lit(float(buffer) * float(buffer))
+
+
 def count_points_in_zones(
     points: DataFrame,
     zones: DataFrame,
@@ -37,15 +50,7 @@ def count_points_in_zones(
 
     zones: (zone_id, xmin, xmax, ymin, ymax) — broadcast side.
     """
-    px, py = F.col(x_col), F.col(y_col)
-    # CIRCULAR buffer (r9 review): the reference's gpd .buffer(150) is a
-    # disc, but the previous per-axis expansion tested the Chebyshev
-    # square — points in the corner lune (box distance in (r, r·√2]) were
-    # false positives. Exact Euclidean point-to-box distance, squared on
-    # both sides so no sqrt enters the cross-engine-exact predicate.
-    dx = F.greatest(F.col("xmin") - px, px - F.col("xmax"), F.lit(0.0))
-    dy = F.greatest(F.col("ymin") - py, py - F.col("ymax"), F.lit(0.0))
-    pred = dx * dx + dy * dy <= F.lit(float(buffer) * float(buffer))
+    pred = point_within_box_buffer(F.col(x_col), F.col(y_col), buffer)
     joined = points.join(F.broadcast(zones), pred, "left")
     return joined.groupBy(*point_keys).agg(
         F.count(F.col("zone_id")).alias("n_zones")

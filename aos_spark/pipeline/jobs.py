@@ -1,13 +1,29 @@
 """The three pipeline modes — initialize / update / patch — composed from
-the operator library (SURVEY.md §3 lifecycle, main_pipeline.py:816-828).
+the operator library (SURVEY.md §3 lifecycle, main_pipeline.py:816-828),
+plus the storm constants and view builders they share with the registry.
 
 Domain mapping onto the driver's fixture tables (TESTDATA.md): the `events`
 table plays the forecast fact stream — `user_id` is the tile key,
-`event_type` the ensemble member (8 members, the FULL_ENSEMBLE_SIZE
-analog of impact_analysis.py:185-188), and `value` the wind intensity.
-"Member hits tile at threshold t" ≡ `value >= t`, which makes thresholds
-nested by construction — the same exceedance-envelope property the CCI
-differencing relies on (impact_analysis.py:2617-2740).
+`event_type` the ensemble member (ENSEMBLE_SIZE = 8 members, the
+FULL_ENSEMBLE_SIZE analog of impact_analysis.py:185-188), and `value` the
+wind intensity. "Member hits tile at threshold t" ≡ `value >= t`, which
+makes thresholds nested by construction — the same exceedance-envelope
+property the CCI differencing relies on (impact_analysis.py:2617-2740).
+
+Defined once here, imported by `aos_spark.queries` and
+`aos_spark.report.assemble`: WIND_THRESHOLDS, ENSEMBLE_SIZE, KEY_THRESHOLD,
+FACILITY_KINDS, FACILITY_BUFFER and the admin zone dim (ZONES, zones_df).
+
+View builders — `update` composes them, and the registry's
+`j2_facility_probability` query is the same chain, checked against its
+DuckDB oracle:
+
+- member_hits(events)          → (tile_id, member, wind_threshold)
+- member_envelopes(hits)       → per (member, threshold) bbox union
+- facilities(spark, sf_dir)    → (facility_id, kind, fx, fy)
+- facility_hits(fac, env)      → facilities within the disc buffer of an
+                                 envelope (ops.spatial_assign predicate)
+- facility_probability(fac, fac_hits) → one row per facility × threshold
 
 Every view is written with dynamic partition overwrite (the F9
 prefix-delete replacement) partitioned by (storm, forecast_compact
@@ -20,31 +36,57 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aos_spark.io.readers import read_sf_table
 from aos_spark.io.writers import write_view
-from aos_spark.ops import cci, probability, rollup, severity, spatial_assign
+from aos_spark.ops import cci, probability, rollup, spatial_assign, windows
+from aos_spark.ops.filters import new_work_antijoin
 from aos_spark.pipeline import control
 
 WIND_THRESHOLDS = [50, 100, 150]
-ENSEMBLE_SIZE = 8
+ENSEMBLE_SIZE = 8  # fixed denominator ~ FULL_ENSEMBLE_SIZE=51 (impact_analysis.py:185-188)
 KEY_THRESHOLD = 100  # KEY_FOR_EXPECTED analog (reports.py:67)
 
 FACILITY_KINDS = ["schools", "health_centers", "shelters", "wash"]
 FACILITY_BUFFER = 2.0  # plane-unit analog of the 150 m facility buffer
                        # (BUFFER_DISTANCE_METERS, impact_analysis.py:175)
 
-# tile → plane coordinates for the admin zone assignment (deterministic,
-# key-derived — the quadkey-center formula analog)
-def _tile_points(tiles: DataFrame, key: str = "tile_id") -> DataFrame:
-    return tiles.withColumn("cx", (F.col(key) * 7.0) % 6000.0).withColumn(
-        "cy", (F.col(key) % 97) * 10.0
+# admin zone dim: a fixed literal shared by the pipeline, the registry's
+# spatial queries and their oracle VALUES lists
+ZONES: list[tuple[int, float, float, float, float]] = [
+    (1, 0.0, 3000.0, 0.0, 500.0),
+    (2, 2500.0, 6000.0, 0.0, 500.0),  # overlaps zone 1 → tie-break path
+    (3, 0.0, 3000.0, 500.0, 1000.0),
+    (4, 3000.0, 6000.0, 400.0, 1000.0),  # overlaps zone 3
+    (5, 8000.0, 9000.0, 0.0, 300.0),  # island: gaps → overlap/nearest paths
+]
+
+
+def zones_df(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame(
+        ZONES, "zone_id INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE"
     )
 
 
-def _facilities(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _thresholds_df(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([(t,) for t in WIND_THRESHOLDS], "wind_threshold INT")
+
+
+def _tile_xy() -> tuple[Column, Column]:
+    """tile_id → plane coordinates (deterministic, key-derived — the
+    quadkey-center formula analog)."""
+    t = F.col("tile_id")
+    return (t * 7.0) % 6000.0, (t % 97) * 10.0
+
+
+def _tile_points(tiles: DataFrame) -> DataFrame:
+    cx, cy = _tile_xy()
+    return tiles.withColumn("cx", cx).withColumn("cy", cy)
+
+
+def facilities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Facility point sets (schools / health centers / shelters / WASH)
     derived deterministically from the customer dim — the analog of the
     fetch_schools/fetch_health_centers/fetch_shelters/fetch_wash location
@@ -60,11 +102,61 @@ def _facilities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zones_df(spark: SparkSession) -> DataFrame:
-    from aos_spark.queries import ZONES
+def member_hits(ev: DataFrame) -> DataFrame:
+    """(tile_id, member, wind_threshold) hit triples — the J1 equivalent.
+    One scan fans out to all thresholds via an array literal (no per-
+    threshold loop, F1 collapsed into a grouping column)."""
+    thresholds = F.array(*[F.lit(t) for t in WIND_THRESHOLDS])
+    return (
+        ev.select(
+            F.col("user_id").alias("tile_id"),
+            F.col("event_type").alias("member"),
+            F.explode(F.filter(thresholds, lambda t: F.col("value") >= t)).alias(
+                "wind_threshold"
+            ),
+        )
+        .distinct()
+    )
 
-    return spark.createDataFrame(
-        ZONES, "zone_id INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE"
+
+def member_envelopes(hits: DataFrame) -> DataFrame:
+    """A12: a member's envelope per threshold is the bbox union of its hit
+    tiles' ±50 boxes → (member, wind_threshold, xmin, xmax, ymin, ymax).
+    At most members × thresholds rows, so it always broadcasts."""
+    # aggregating straight over the hit set (no projection between) lets
+    # Catalyst drop the hits' distinct: min/max ignore duplicates
+    cx, cy = _tile_xy()
+    return hits.groupBy("member", "wind_threshold").agg(
+        F.min(cx - 50.0).alias("xmin"),
+        F.max(cx + 50.0).alias("xmax"),
+        F.min(cy - 50.0).alias("ymin"),
+        F.max(cy + 50.0).alias("ymax"),
+    )
+
+
+def facility_hits(fac: DataFrame, env: DataFrame) -> DataFrame:
+    """J2: (facility_id, kind, member, wind_threshold) for every member
+    envelope that reaches the facility's disc buffer. The envelope dim is
+    broadcast; facilities never shuffle."""
+    near = spatial_assign.point_within_box_buffer(
+        F.col("fx"), F.col("fy"), FACILITY_BUFFER
+    )
+    return fac.join(F.broadcast(env), near).select(
+        "facility_id", "kind", "member", "wind_threshold"
+    )
+
+
+def facility_probability(fac: DataFrame, fac_hits: DataFrame) -> DataFrame:
+    """J2×4 + S11: one row per facility per threshold, probability = hit
+    members / fixed ensemble size, zero-hit facilities kept at 0.0
+    (create_*_view_from_envelopes, impact_analysis.py:1620-1717)."""
+    keys = ["facility_id", "wind_threshold"]
+    prob = probability.member_probability(
+        fac_hits, keys, member_col="member", ensemble_size=ENSEMBLE_SIZE
+    )
+    grid = fac.crossJoin(F.broadcast(_thresholds_df(fac.sparkSession)))
+    return probability.attach_probability(grid, prob, keys).select(
+        "facility_id", "kind", "wind_threshold", "probability"
     )
 
 
@@ -105,7 +197,7 @@ def initialize(spark: SparkSession, sf_dir: str, warehouse: str, country: str = 
         (F.col("cy") - 50.0).alias("bymin"),
         (F.col("cy") + 50.0).alias("bymax"),
     )
-    assigned = spatial_assign.assign_zones_3step(items, _zones_df(spark)).select(
+    assigned = spatial_assign.assign_zones_3step(items, zones_df(spark)).select(
         F.col("item_id").alias("tile_id"), F.col("zone_id").alias("admin_id")
     )
     layer = base.join(assigned, "tile_id", "left").withColumn("country", F.lit(country))
@@ -130,7 +222,7 @@ def _write_admin_layer(spark: SparkSession, warehouse: str, country: str) -> Non
         avg_cols=["rwi"],
         optional_sum_cols=[],
     )
-    zones = _zones_df(spark).select(F.col("zone_id").alias("admin_id"))
+    zones = zones_df(spark).select(F.col("zone_id").alias("admin_id"))
     out = rollup.rollup_preserving_empty(
         zones, agg, ["admin_id"], zero_fill_cols=["population", "built_surface"]
     )
@@ -141,23 +233,6 @@ def _write_admin_layer(spark: SparkSession, warehouse: str, country: str) -> Non
         F.col("rwi").cast("double").alias("rwi"),
     ).withColumn("country", F.lit(country))
     write_view(out, admin_layer_path(warehouse), partition_cols=["country"])
-
-
-def _member_hits(ev: DataFrame) -> DataFrame:
-    """(tile_id, member, wind_threshold) hit triples — the J1 equivalent.
-    One scan fans out to all thresholds via an array literal (no per-
-    threshold loop, F1 collapsed into a grouping column)."""
-    thresholds = F.array(*[F.lit(t) for t in WIND_THRESHOLDS])
-    return (
-        ev.select(
-            F.col("user_id").alias("tile_id"),
-            F.col("event_type").alias("member"),
-            F.explode(F.filter(thresholds, lambda t: F.col("value") >= t)).alias(
-                "wind_threshold"
-            ),
-        )
-        .distinct()
-    )
 
 
 def update(
@@ -174,15 +249,14 @@ def update(
 
     Chain per (storm, forecast): F11 idempotency gate → member-hit triples →
     A1 probability (fixed denominator) → A2 expected impacts → tile view →
-    A3 admin view → W3/W4 CCI → A5 severity → report JSON → run log.
+    A3 admin view → W3/W4 CCI → A5 severity → facility + track views →
+    track segments → report JSON → run log.
     """
     t0 = time.time()
     cand = spark.createDataFrame(
         [(storm, forecast_time)], "storm STRING, forecast_time STRING"
     )
     if not rewrite:
-        from aos_spark.ops.filters import new_work_antijoin
-
         todo = new_work_antijoin(
             cand, control.latest_run_status(spark, warehouse), ["storm", "forecast_time"]
         )
@@ -190,48 +264,39 @@ def update(
             return {"status": "SKIPPED", "storm": storm, "forecast_time": forecast_time}
 
     run_id = control.log_run_start(spark, warehouse, storm, forecast_time)
+    fc = ["storm", "forecast_compact"]
+
+    def write(name: str, df: DataFrame, partition_cols: list[str]) -> None:
+        stamped = df.withColumn("storm", F.lit(storm)).withColumn(
+            "forecast_compact", F.lit(forecast_time)
+        )
+        write_view(stamped, os.path.join(warehouse, "views", name), partition_cols)
+
     cached = []
     try:
         ev = read_sf_table(spark, sf_dir, "events")
         base = spark.read.parquet(base_layer_path(warehouse))
-        # the hit set feeds probability AND severity; the tile view feeds
-        # its own sink, the admin rollup, the CCI, and the report — cache
-        # both for the storm job instead of recomputing per action
-        # (the structural CSE the reference lacks, SURVEY §4.1)
-        hits = _member_hits(ev).persist()
+        # the hit set feeds probability, severity and the envelopes; the
+        # tile view feeds its own sink, the admin rollup, the CCI, and the
+        # report — cache both for the storm job instead of recomputing per
+        # action (the structural CSE the reference lacks, SURVEY §4.1)
+        hits = member_hits(ev).persist()
         cached.append(hits)
 
-        # A1: probability per (tile, threshold) — count members / 8, tiles
-        # with no hits at a threshold get probability 0 via the left join
-        prob = hits.groupBy("tile_id", "wind_threshold").agg(
-            (F.countDistinct("member") / F.lit(float(ENSEMBLE_SIZE))).alias("probability")
+        # A1/A2: probability per (tile, threshold) over the fixed ensemble
+        # (tiles no member hits at a threshold get 0.0), then E_ impacts
+        keys = ["tile_id", "wind_threshold"]
+        prob = probability.member_probability(
+            hits, keys, member_col="member", ensemble_size=ENSEMBLE_SIZE
         )
-        thresholds_df = spark.createDataFrame(
-            [(t,) for t in WIND_THRESHOLDS], "wind_threshold INT"
+        tiles = probability.attach_probability(
+            base.crossJoin(F.broadcast(_thresholds_df(spark))), prob, keys
         )
-        tiles_x_th = base.crossJoin(F.broadcast(thresholds_df))
-        tile_view = tiles_x_th.join(prob, ["tile_id", "wind_threshold"], "left").fillna(
-            {"probability": 0.0}
-        )
-        # A2: expected impacts
-        for c in BASE_SUM_COLS + BASE_AVG_COLS:
-            tile_view = tile_view.withColumn(f"E_{c}", F.col(c) * F.col("probability"))
-        tile_view = tile_view.select(
-            "tile_id",
-            "admin_id",
-            "wind_threshold",
-            "probability",
-            *[f"E_{c}" for c in BASE_SUM_COLS + BASE_AVG_COLS],
-        ).withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
-        )
-        tile_view = tile_view.persist()
+        tile_view = probability.expected_impact(
+            tiles, BASE_SUM_COLS + BASE_AVG_COLS, keep=["tile_id", "admin_id", "wind_threshold"]
+        ).persist()
         cached.append(tile_view)
-        write_view(
-            tile_view,
-            os.path.join(warehouse, "views", "tiles"),
-            partition_cols=["storm", "forecast_compact", "wind_threshold"],
-        )
+        write("tiles", tile_view, [*fc, "wind_threshold"])
 
         # A3: admin rollup of expected impacts (null contract: E_rwi optional)
         dec = tile_view
@@ -243,117 +308,22 @@ def update(
             sum_cols=[f"E_{c}" for c in BASE_SUM_COLS],
             avg_cols=[],
             optional_sum_cols=["E_rwi"],
-        )
-        admin_view = admin_view.select(
+        ).select(
             "admin_id",
             "wind_threshold",
             *[F.col(f"E_{c}").cast("double").alias(f"E_{c}") for c in BASE_SUM_COLS],
             "E_rwi",
-        ).withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
         )
-        write_view(
-            admin_view,
-            os.path.join(warehouse, "views", "admin"),
-            partition_cols=["storm", "forecast_compact", "wind_threshold"],
-        )
+        write("admin", admin_view, [*fc, "wind_threshold"])
 
         # W3/W4: CCI from the threshold-long tile view
         long_df = tile_view.select(
-            "tile_id", "wind_threshold", (F.col("E_population")).alias("exposure")
+            "tile_id", "wind_threshold", F.col("E_population").alias("exposure")
         )
-        cci_view = cci.cci_from_long(long_df, ["tile_id"], "wind_threshold", ["exposure"])
-        cci_view = cci_view.withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
-        )
-        write_view(
-            cci_view,
-            os.path.join(warehouse, "views", "cci"),
-            partition_cols=["storm", "forecast_compact"],
-        )
+        write("cci", cci.cci_from_long(long_df, ["tile_id"], "wind_threshold", ["exposure"]), fc)
 
-        # A5: severity per member
-        sev_in = hits.join(base, "tile_id").select(
-            F.col("member"),
-            F.col("wind_threshold").alias("threshold"),
-            F.col("population").cast("decimal(18,2)").alias("exposure"),
-        )
-        sev = severity.member_severity(sev_in, "member", "threshold", ["exposure"])
-        sev = sev.withColumn(
-            "total_exposure", F.col("total_exposure").cast("double")
-        ).withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
-        )
-        write_view(
-            sev,
-            os.path.join(warehouse, "views", "severity"),
-            partition_cols=["storm", "forecast_compact"],
-        )
-
-        # J2×4 + S11: per-facility probability views (schools / health
-        # centers / shelters / WASH) — one row per facility per threshold,
-        # probability = hit members / fixed ensemble size, zero-hit
-        # facilities kept at 0.0 (create_*_view_from_envelopes,
-        # impact_analysis.py:1620-1717, saved at :2809-2840). A member's
-        # "envelope" in the events domain is the bbox union (A12) of its hit
-        # tiles; facility hit = buffered point-in-bbox. The envelope dim is
-        # members × thresholds ≤ 24 rows → broadcast; facilities never
-        # shuffle.
-        fac = _facilities(spark, sf_dir)
-        boxes = _tile_points(hits, "tile_id").select(
-            "member",
-            "wind_threshold",
-            (F.col("cx") - 50.0).alias("xmin"),
-            (F.col("cx") + 50.0).alias("xmax"),
-            (F.col("cy") - 50.0).alias("ymin"),
-            (F.col("cy") + 50.0).alias("ymax"),
-        )
-        env = spatial_assign.bbox_union(boxes, ["member", "wind_threshold"])
-        b = F.lit(FACILITY_BUFFER)
-        in_env = (
-            (F.col("fx") + b >= F.col("xmin"))
-            & (F.col("fx") - b <= F.col("xmax"))
-            & (F.col("fy") + b >= F.col("ymin"))
-            & (F.col("fy") - b <= F.col("ymax"))
-        )
-        fac_hits = (
-            fac.join(F.broadcast(env), in_env)
-            .select("facility_id", "kind", "member", "wind_threshold")
-            .persist()
-        )
-        cached.append(fac_hits)
-        fac_view = (
-            fac.crossJoin(F.broadcast(thresholds_df))
-            .join(
-                fac_hits.groupBy("facility_id", "wind_threshold").agg(
-                    (F.countDistinct("member") / F.lit(float(ENSEMBLE_SIZE))).alias(
-                        "probability"
-                    )
-                ),
-                ["facility_id", "wind_threshold"],
-                "left",
-            )
-            .fillna({"probability": 0.0})
-            .select("facility_id", "kind", "wind_threshold", "probability")
-            .withColumn("storm", F.lit(storm))
-            .withColumn("forecast_compact", F.lit(forecast_time))
-        )
-        write_view(
-            fac_view,
-            os.path.join(warehouse, "views", "facilities"),
-            partition_cols=["kind", "storm", "forecast_compact", "wind_threshold"],
-        )
-
-        # track severity view: per (member, threshold) — facility counts per
-        # kind + tile-metric sums under the member's envelope
-        # (create_tracks_view_from_envelopes, impact_analysis.py:2038-2091).
-        kind_counts = (
-            fac_hits.groupBy("member", "wind_threshold")
-            .pivot("kind", FACILITY_KINDS)
-            .agg(F.count(F.lit(1)))
-        )
-        for k in FACILITY_KINDS:
-            kind_counts = kind_counts.withColumnRenamed(k, f"severity_{k}")
+        # J6/A5: tile-metric sums per (member, threshold) over hits ⋈ base —
+        # the severity view, and the track view's severity sums below
         tile_sums = (
             hits.join(base, "tile_id")
             .groupBy("member", "wind_threshold")
@@ -365,62 +335,66 @@ def update(
                 .cast("double")
                 .alias("severity_built_surface"),
             )
+            .persist()
         )
+        cached.append(tile_sums)
+        sev = tile_sums.select(
+            "member",
+            F.col("wind_threshold").alias("threshold"),
+            F.col("severity_population").alias("total_exposure"),
+        )
+        write("severity", sev, fc)
+
+        # J2×4 + S11: per-facility probability views (schools / health
+        # centers / shelters / WASH), saved at impact_analysis.py:2809-2840
+        # — the same builders as the registry's j2_facility_probability
+        fac = facilities(spark, sf_dir)
+        env = member_envelopes(hits)
+        fac_hits = facility_hits(fac, env).persist()
+        cached.append(fac_hits)
+        fac_view = facility_probability(fac, fac_hits)
+        write("facilities", fac_view, ["kind", *fc, "wind_threshold"])
+
+        # track severity view: per (member, threshold) — facility counts per
+        # kind + tile-metric sums under the member's envelope
+        # (create_tracks_view_from_envelopes, impact_analysis.py:2038-2091).
+        kind_counts = (
+            fac_hits.groupBy("member", "wind_threshold")
+            .pivot("kind", FACILITY_KINDS)
+            .agg(F.count(F.lit(1)))
+        )
+        for k in FACILITY_KINDS:
+            kind_counts = kind_counts.withColumnRenamed(k, f"severity_{k}")
         track_view = (
             env.select("member", "wind_threshold")
             .join(kind_counts, ["member", "wind_threshold"], "left")
             .join(tile_sums, ["member", "wind_threshold"], "left")
             .fillna({f"severity_{k}": 0 for k in FACILITY_KINDS})
-            .withColumn("storm", F.lit(storm))
-            .withColumn("forecast_compact", F.lit(forecast_time))
         )
-        write_view(
-            track_view,
-            os.path.join(warehouse, "views", "tracks"),
-            partition_cols=["storm", "forecast_compact", "wind_threshold"],
-        )
+        write("tracks", track_view, [*fc, "wind_threshold"])
 
         # W1: track-segment view — each member's event sequence paired with
         # its successor (consecutive-point polyline segments,
         # impact_analysis.py:2922-2927 / reports.py:224-254)
-        from aos_spark.ops import windows as win_ops
-
         trk = _tile_points(
             ev.select(
                 F.col("event_type").alias("member"),
                 "ts",
                 "event_id",
                 F.col("user_id").alias("tile_id"),
-            ),
-            "tile_id",
+            )
         )
-        seg = win_ops.lead_segments(
-            trk, ["member"], ["ts", "event_id"], ["cx", "cy"]
-        ).select(
-            "member",
-            "ts",
-            "cx",
-            "cy",
-            "cx_next",
-            "cy_next",
-        )
-        seg = seg.withColumn("storm", F.lit(storm)).withColumn(
-            "forecast_compact", F.lit(forecast_time)
-        )
-        write_view(
-            seg,
-            os.path.join(warehouse, "views", "track_segments"),
-            partition_cols=["storm", "forecast_compact"],
-        )
+        seg = windows.lead_segments(trk, ["member"], ["ts", "event_id"], ["cx", "cy"])
+        write("track_segments", seg.select("member", "ts", "cx", "cy", "cx_next", "cy_next"), fc)
 
-        # report (driver-side JSON, incl. previous-forecast deltas)
-        from aos_spark.report.assemble import build_report, save_report
+        # report (driver-side JSON, incl. previous-forecast deltas); imported
+        # here because report.assemble imports this module's constants
+        from aos_spark.report import assemble
 
-        report = build_report(
-            spark, warehouse, storm, forecast_time, tile_view, admin_view, ev,
-            fac_view=fac_view,
+        report = assemble.build_report(
+            spark, warehouse, storm, forecast_time, tile_view, admin_view, ev, fac_view
         )
-        save_report(warehouse, storm, forecast_time, report)
+        assemble.save_report(warehouse, storm, forecast_time, report)
 
         control.log_run_complete(
             spark, warehouse, run_id, success=True, runtime_seconds=time.time() - t0

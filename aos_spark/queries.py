@@ -27,6 +27,8 @@ from aos_spark.llm import dedup as D
 from aos_spark.llm import similarity as SIM
 from aos_spark.llm import text as TX
 from aos_spark.ops.exact_round import round_micro_cents, round_ratio6_micro
+from aos_spark.pipeline import jobs
+from aos_spark.pipeline.jobs import ENSEMBLE_SIZE, ZONES, zones_df
 from aos_spark.ops import (
     cci,
     filters,
@@ -58,20 +60,18 @@ def _dsum_sql(col: str, scale: int = 2) -> str:
 # --------------------------------------------------------------------------
 # Flagship: the storm-impact pipeline in relational form (SURVEY §7.2 slice 0)
 # events as the fact stream: user_id ~ zone, event_type ~ ensemble member,
-# fixed denominator 8 ~ FULL_ENSEMBLE_SIZE=51 (impact_analysis.py:185-188).
+# fixed denominator ENSEMBLE_SIZE=8 ~ FULL_ENSEMBLE_SIZE=51
+# (impact_analysis.py:185-188).
 # Chain: F4 recency filter → A1 probability (fixed denominator) → A2 expected
 # impact → A3/J9 rollup with the null contract → A8 top-K.
 # --------------------------------------------------------------------------
-
-FLAGSHIP_ENSEMBLE = 8
-
 
 def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     ev = filters.recency_filter(ev, "ts", "2024-02-15", 40)
     hits = ev.select("user_id", "event_type").distinct()
     prob = probability.member_probability(
-        hits, ["user_id"], member_col="event_type", ensemble_size=FLAGSHIP_ENSEMBLE
+        hits, ["user_id"], member_col="event_type", ensemble_size=ENSEMBLE_SIZE
     )
     base = ev.groupBy("user_id").agg(dsum("value").alias("exposure"))
     tiles = probability.attach_probability(base, prob, ["user_id"])
@@ -96,7 +96,7 @@ WITH ev AS (
 ),
 prob AS (
   SELECT user_id,
-         COUNT(DISTINCT event_type) / {float(FLAGSHIP_ENSEMBLE)} AS probability
+         COUNT(DISTINCT event_type) / {float(ENSEMBLE_SIZE)} AS probability
   FROM ev GROUP BY user_id
 ),
 base AS (
@@ -513,7 +513,7 @@ def q_probability_expected(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     hits = ev.select("user_id", "event_type").distinct()
     prob = probability.member_probability(
-        hits, ["user_id"], member_col="event_type", ensemble_size=FLAGSHIP_ENSEMBLE
+        hits, ["user_id"], member_col="event_type", ensemble_size=ENSEMBLE_SIZE
     )
     base = ev.groupBy("user_id").agg(dsum("value").alias("total_value"))
     tiles = probability.attach_probability(base, prob, ["user_id"])
@@ -525,7 +525,7 @@ def q_probability_expected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_PROB = f"""
 WITH prob AS (
-  SELECT user_id, COUNT(DISTINCT event_type) / {float(FLAGSHIP_ENSEMBLE)} AS probability
+  SELECT user_id, COUNT(DISTINCT event_type) / {float(ENSEMBLE_SIZE)} AS probability
   FROM events GROUP BY user_id
 ),
 base AS (
@@ -1389,26 +1389,13 @@ FROM scored QUALIFY rank <= 10
 # --------------------------------------------------------------------------
 # Spatial-assignment tier (J2, J3→J5) over axis-aligned zones — the numeric
 # core of the reference's spatial joins (tiles ARE boxes; SURVEY §4.3).
-# Zones are a fixed literal dim shared by Spark and the oracle VALUES list.
+# Zones are the fixed literal dim pipeline.jobs.ZONES, shared by Spark and
+# the oracle VALUES list.
 # --------------------------------------------------------------------------
-
-ZONES: list[tuple[int, float, float, float, float]] = [
-    (1, 0.0, 3000.0, 0.0, 500.0),
-    (2, 2500.0, 6000.0, 0.0, 500.0),  # overlaps zone 1 → tie-break path
-    (3, 0.0, 3000.0, 500.0, 1000.0),
-    (4, 3000.0, 6000.0, 400.0, 1000.0),  # overlaps zone 3
-    (5, 8000.0, 9000.0, 0.0, 300.0),  # island: gaps → overlap/nearest paths
-]
 
 _ZONES_SQL_VALUES = ", ".join(
     f"({zid}, {xmin}, {xmax}, {ymin}, {ymax})" for zid, xmin, xmax, ymin, ymax in ZONES
 )
-
-
-def _zones_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ZONES, "zone_id INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE"
-    )
 
 
 def _customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1426,7 +1413,7 @@ def q_point_zone_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog, impact_analysis.py:1666-1686; zero-hit points kept at 0)."""
     pts = _customer_points(spark, sf_dir)
     return spatial_assign.count_points_in_zones(
-        pts, _zones_df(spark), ["item_id"], buffer=50.0
+        pts, zones_df(spark), ["item_id"], buffer=50.0
     )
 
 
@@ -1458,7 +1445,7 @@ def q_zone_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("y") - 50.0).alias("bymin"),
         (F.col("y") + 50.0).alias("bymax"),
     )
-    return spatial_assign.assign_zones_3step(items, _zones_df(spark))
+    return spatial_assign.assign_zones_3step(items, zones_df(spark))
 
 
 ORACLE_ZONE_ASSIGN = f"""
@@ -1501,68 +1488,22 @@ UNION ALL SELECT item_id, zone_id, 'nearest' AS method FROM s3
 """
 
 
-FACILITY_KINDS = ["schools", "health_centers", "shelters", "wash"]
-
-
 def q_facility_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2×4 + A12: the per-facility probability view family from the update
-    job as a standalone oracle-checked query — one row per facility per
-    threshold, probability = members whose envelope reaches the (buffered)
-    facility / fixed ensemble size, zero-hit facilities kept at 0.0
-    (create_school_view_from_envelopes, impact_analysis.py:1620-1717; the
-    member envelope is the A12 bbox union of the member's hit tiles).
+    """J2×4 + A12: the update job's per-facility probability view as a
+    standalone oracle-checked query, built by the same pipeline builders —
+    one row per facility per threshold, probability = members whose
+    envelope reaches the (disc-buffered) facility / fixed ensemble size,
+    zero-hit facilities kept at 0.0 (create_school_view_from_envelopes,
+    impact_analysis.py:1620-1717; the member envelope is the A12 bbox union
+    of the member's hit tiles).
 
     All coordinates are integer-derived so Spark and DuckDB agree exactly.
     Plan shape: the envelope dim is members × thresholds (≤ 24 rows) →
     broadcast nested-loop on the range predicate; facilities never shuffle.
     """
-    ev = _t(spark, sf_dir, "events")
-    thresholds = [50, 100, 150]
-    th_df = spark.createDataFrame([(t,) for t in thresholds], "wind_threshold INT")
-    th_arr = F.array(*[F.lit(t) for t in thresholds])
-    hits = ev.select(
-        F.col("user_id").alias("tile_id"),
-        F.col("event_type").alias("member"),
-        F.explode(F.filter(th_arr, lambda t: F.col("value") >= t)).alias(
-            "wind_threshold"
-        ),
-    ).distinct()
-    env = hits.groupBy("member", "wind_threshold").agg(
-        F.min((F.col("tile_id") * 7) % 6000 - 50).alias("xmin"),
-        F.max((F.col("tile_id") * 7) % 6000 + 50).alias("xmax"),
-        F.min((F.col("tile_id") % 97) * 10 - 50).alias("ymin"),
-        F.max((F.col("tile_id") % 97) * 10 + 50).alias("ymax"),
-    )
-    kinds = F.array(*[F.lit(k) for k in FACILITY_KINDS])
-    fac = _t(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("facility_id"),
-        F.element_at(kinds, (F.col("c_custkey") % 4 + 1).cast("int")).alias("kind"),
-        ((F.col("c_custkey") * 131) % 6000).alias("fx"),
-        ((F.col("c_custkey") * 17) % 970).alias("fy"),
-    )
-    # circular 2-unit facility buffer (r9): Euclidean point-to-box
-    # distance, squared — integer-exact in both engines; the reference's
-    # gpd .buffer() is a disc, not the Chebyshev square
-    fdx = F.greatest(F.col("xmin") - F.col("fx"), F.col("fx") - F.col("xmax"), F.lit(0))
-    fdy = F.greatest(F.col("ymin") - F.col("fy"), F.col("fy") - F.col("ymax"), F.lit(0))
-    in_env = fdx * fdx + fdy * fdy <= F.lit(4)
-    nhit = (
-        fac.join(F.broadcast(env), in_env)
-        .groupBy("facility_id", "wind_threshold")
-        .agg(F.countDistinct("member").alias("n_members"))
-    )
-    return (
-        fac.crossJoin(F.broadcast(th_df))
-        .join(nhit, ["facility_id", "wind_threshold"], "left")
-        .select(
-            "facility_id",
-            "kind",
-            "wind_threshold",
-            (F.coalesce(F.col("n_members"), F.lit(0)) / F.lit(8.0)).alias(
-                "probability"
-            ),
-        )
-    )
+    fac = jobs.facilities(spark, sf_dir)
+    env = jobs.member_envelopes(jobs.member_hits(_t(spark, sf_dir, "events")))
+    return jobs.facility_probability(fac, jobs.facility_hits(fac, env))
 
 
 ORACLE_FACILITY_PROB = """

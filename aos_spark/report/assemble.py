@@ -14,8 +14,12 @@ import math
 import os
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from aos_spark.ops import windows
+from aos_spark.ops.vulnerability import band_sums, poverty_band, urban_rural_class
+from aos_spark.pipeline.jobs import ENSEMBLE_SIZE, FACILITY_KINDS, KEY_THRESHOLD
 
 TOP_K = 5  # reports.py:73
 COMPACT_FMT = "%Y%m%d%H%M%S"  # FILE_STRUCTURE.md:308-311
@@ -84,16 +88,15 @@ def build_report(
     tile_view: DataFrame,
     admin_view: DataFrame,
     events: DataFrame,
-    fac_view: DataFrame | None = None,
-    key_threshold: int = 100,
-    ensemble_size: int = 8,
+    fac_view: DataFrame,
 ) -> dict:
     """Assemble the flat report dict: per-threshold totals (A6), top-K tiles
     (A8), max active threshold (A9), landfall stats (A10/W2), per-admin rows,
     vulnerability breakdowns (A7/F8, reports.py:393-462), per-facility-type
     top-5 lists and expected-impact counts (reports.py:106-143,705-736),
     deltas vs the previous forecast (J13)."""
-    # A6 — ceil'd expected totals per threshold (NULL-safe)
+    # A6 — ceil'd expected totals per threshold (NULL-safe); A9 — highest
+    # threshold with any probability mass. One aggregation for both.
     totals = {
         int(r["wind_threshold"]): r.asDict()
         for r in tile_view.groupBy("wind_threshold")
@@ -104,39 +107,30 @@ def build_report(
             F.sum(F.col("E_built_surface").cast("decimal(18,6)"))
             .cast("double")
             .alias("E_built_surface"),
+            F.sum("probability").alias("p"),
         )
         .collect()
     }
-    # A9 — highest threshold with any probability mass
-    max_th_row = (
-        tile_view.groupBy("wind_threshold")
-        .agg(F.sum("probability").alias("p"))
-        .filter(F.col("p") > 0)
-        .agg(F.max("wind_threshold").alias("m"))
-        .first()
-    )
-    max_active_threshold = _optional(max_th_row["m"]) if max_th_row else None
+    max_active_threshold = max((th for th, r in totals.items() if r["p"] > 0), default=None)
 
     # A8 — top-K tiles by probability at the key threshold (deterministic
     # tie-break by tile_id)
     top_tiles = [
         {"tile_id": int(r["tile_id"]), "probability": r["probability"]}
-        for r in tile_view.filter(F.col("wind_threshold") == key_threshold)
+        for r in tile_view.filter(F.col("wind_threshold") == KEY_THRESHOLD)
         .orderBy(F.col("probability").desc(), F.col("tile_id"))
         .limit(TOP_K)
         .collect()
     ]
 
     # A10/W2 — landfall: first event above the key threshold per member
-    from aos_spark.ops.windows import first_match
-
-    firsts = first_match(
+    firsts = windows.first_match(
         events.select(
             F.col("event_type").alias("member"), "ts", "event_id", "value"
         ),
         ["member"],
         ["ts", "event_id"],
-        F.col("value") >= key_threshold,
+        F.col("value") >= KEY_THRESHOLD,
     )
     lf = firsts.agg(
         F.count(F.lit(1)).alias("n"),
@@ -145,7 +139,7 @@ def build_report(
     ).first()
     landfall = {
         "n_members_making_landfall": int(lf["n"]),
-        "landfall_fraction": round(lf["n"] / ensemble_size, 6),
+        "landfall_fraction": round(lf["n"] / ENSEMBLE_SIZE, 6),
         "earliest": lf["earliest"],
         "latest": lf["latest"],
     }
@@ -158,7 +152,7 @@ def build_report(
             "E_built_surface": _optional(r["E_built_surface"]),
             "E_rwi": _optional(r["E_rwi"]),
         }
-        for r in admin_view.filter(F.col("wind_threshold") == key_threshold).collect()
+        for r in admin_view.filter(F.col("wind_threshold") == KEY_THRESHOLD).collect()
         if r["admin_id"] is not None
     }
 
@@ -168,10 +162,8 @@ def build_report(
     # class analog (the domain has no SMOD layer; same de-expected formula,
     # reports.py:416-439). None-vs-0 contract: no banding data at all → None
     # ("N/A"); data present but an empty band → 0 (confirmed zero).
-    from aos_spark.ops.vulnerability import band_sums, poverty_band, urban_rural_class
-
     key_tiles = tile_view.filter(
-        (F.col("wind_threshold") == key_threshold) & (F.col("probability") > 0)
+        (F.col("wind_threshold") == KEY_THRESHOLD) & (F.col("probability") > 0)
     )
     vulnerability: dict = {}
     rwi_bands = {
@@ -215,47 +207,42 @@ def build_report(
     # ceil(Σ probability); kind with no facility data at all → None)
     top_facilities: dict = {}
     expected_facilities: dict = {}
-    if fac_view is not None:
-        from pyspark.sql import Window
-
-        from aos_spark.pipeline.jobs import FACILITY_KINDS
-
-        ths = sorted(
-            r["wind_threshold"]
-            for r in fac_view.select("wind_threshold").distinct().collect()
+    ths = sorted(
+        r["wind_threshold"]
+        for r in fac_view.select("wind_threshold").distinct().collect()
+    )
+    key_th = KEY_THRESHOLD if KEY_THRESHOLD in ths else (ths[0] if ths else None)
+    if key_th is not None:
+        kf = fac_view.filter(F.col("wind_threshold") == key_th)
+        w = Window.partitionBy("kind").orderBy(
+            F.col("probability").desc(), "facility_id"
         )
-        key_th = key_threshold if key_threshold in ths else (ths[0] if ths else None)
-        if key_th is not None:
-            kf = fac_view.filter(F.col("wind_threshold") == key_th)
-            w = Window.partitionBy("kind").orderBy(
-                F.col("probability").desc(), "facility_id"
+        top_rows = (
+            kf.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= TOP_K)
+            .collect()
+        )
+        sums = {
+            r["kind"]: r
+            for r in kf.groupBy("kind")
+            .agg(F.sum("probability").alias("p"))
+            .collect()
+        }
+        for kind in FACILITY_KINDS:
+            rows = sorted(
+                (r for r in top_rows if r["kind"] == kind),
+                key=lambda r: r["__rn"],
             )
-            top_rows = (
-                kf.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= TOP_K)
-                .collect()
+            top_facilities[kind] = [
+                {
+                    "facility_id": int(r["facility_id"]),
+                    "probability": r["probability"],
+                }
+                for r in rows
+            ]
+            expected_facilities[f"expected_{kind}"] = (
+                _optional_ceil(sums[kind]["p"]) if kind in sums else None
             )
-            sums = {
-                r["kind"]: r
-                for r in kf.groupBy("kind")
-                .agg(F.sum("probability").alias("p"))
-                .collect()
-            }
-            for kind in FACILITY_KINDS:
-                rows = sorted(
-                    (r for r in top_rows if r["kind"] == kind),
-                    key=lambda r: r["__rn"],
-                )
-                top_facilities[kind] = [
-                    {
-                        "facility_id": int(r["facility_id"]),
-                        "probability": r["probability"],
-                    }
-                    for r in rows
-                ]
-                expected_facilities[f"expected_{kind}"] = (
-                    _optional_ceil(sums[kind]["p"]) if kind in sums else None
-                )
 
     report = {
         "storm": storm,
@@ -264,11 +251,9 @@ def build_report(
         "max_active_threshold": max_active_threshold,
         "thresholds": {
             str(th): {
-                "expected_population_impacted": _optional_ceil(
-                    totals.get(th, {}).get("E_population") if th in totals else None
-                ),
+                "expected_population_impacted": _optional_ceil(totals[th]["E_population"]),
                 "expected_built_surface_impacted": _optional_ceil(
-                    totals.get(th, {}).get("E_built_surface") if th in totals else None
+                    totals[th]["E_built_surface"]
                 ),
             }
             for th in sorted(totals)

@@ -329,6 +329,19 @@ def test_partition_pruning_on_view_output(spark, tmp_path):
     assert "PartitionFilters" in plan and "country" in plan
     assert pruned.count() == 250
 
+    # a misspelled partition column raises before anything is written: an
+    # unpartitioned overwrite would replace the whole dataset
+    import glob
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    layout = sorted(glob.glob(out + "/*"))
+    with pytest.raises(AnalysisException):
+        write_view(df.filter(F.col("country") == "1"), out, partition_cols=["contry"])
+    assert sorted(glob.glob(out + "/*")) == layout
+    assert spark.read.parquet(out).count() == 1_000
+
 
 def test_compact_dataset_rejects_object_store_uris(spark):
     """compact_dataset is local-filesystem-only (os.rename does not speak

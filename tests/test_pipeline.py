@@ -5,12 +5,20 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+from pathlib import Path
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from aos_spark.pipeline import control, jobs
+from aos_spark.queries import ORACLES
 from aos_spark.report import assemble
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+
+from check_oracle import value_hash  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 STORM = "TESTSTORM"
@@ -76,6 +84,21 @@ def test_update_writes_facility_and_track_views(spark, warehouse):
     assert (
         fac.filter((F.col("probability") < 0) | (F.col("probability") > 1)).count() == 0
     )
+    # values: the forecast's facility view is the registry's
+    # j2_facility_probability, so it must match that query's DuckDB oracle
+    # (row count + order-insensitive value hash, as scripts/check_oracle.py)
+    got = fac.filter(
+        (F.col("storm") == STORM) & (F.col("forecast_compact") == FC1)
+    ).drop("storm", "forecast_compact")
+    con = duckdb.connect()
+    for t in ("events", "customer"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    res = con.execute(ORACLES["j2_facility_probability"])
+    want_cols = [d[0] for d in res.description]
+    want = res.fetchall()
+    got_rows = [tuple(r) for r in got.collect()]
+    assert len(got_rows) == len(want)
+    assert value_hash(got_rows, got.columns) == value_hash(want, want_cols)
 
     tracks = spark.read.parquet(os.path.join(warehouse, "views", "tracks"))
     for k in jobs.FACILITY_KINDS:

@@ -123,3 +123,25 @@ def test_point_zone_circular_buffer_excludes_corner_lune(spark):
         ).collect()
     }
     assert out == {1: 0, 2: 1, 3: 1}, out
+
+    # the facility builder shares the disc predicate (2-unit buffer): a
+    # facility diagonally 1.5,1.5 beyond the envelope corner (box distance
+    # ~2.12, inside the Chebyshev square) gets probability 0; one axis-
+    # aligned at distance 2 is hit by the one member
+    from aos_spark.pipeline import jobs
+
+    env = spark.createDataFrame(
+        [("m0", 100, 0.0, 100.0, 0.0, 100.0)],
+        "member string, wind_threshold int, xmin double, xmax double, ymin double, ymax double",
+    )
+    fac = spark.createDataFrame(
+        [(1, "schools", 101.5, 101.5), (2, "schools", 102.0, 50.0)],
+        "facility_id long, kind string, fx double, fy double",
+    )
+    probs = {
+        r["facility_id"]: r["probability"]
+        for r in jobs.facility_probability(fac, jobs.facility_hits(fac, env))
+        .filter(F.col("wind_threshold") == 100)
+        .collect()
+    }
+    assert probs == {1: 0.0, 2: 1 / jobs.ENSEMBLE_SIZE}, probs
