@@ -17,6 +17,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aos_spark.io.local_frame import literal_frame
+
 RUN_LOG_SCHEMA = (
     "run_id STRING, storm STRING, forecast_time STRING, status STRING, "
     "started_at TIMESTAMP, finished_at TIMESTAMP, runtime_seconds DOUBLE, "
@@ -38,10 +40,8 @@ def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
     an empty frame — which upsert_country then OVERWROTE the registry
     with, and which made the F11 idempotency gate reprocess everything
     (r9 review). Anything other than path-not-found must raise."""
-    import os as _os
-
-    if not _os.path.exists(path.removeprefix("file://")):
-        return spark.createDataFrame([], schema)
+    if not os.path.exists(path.removeprefix("file://")):
+        return literal_frame(spark, [], schema)
     return spark.read.parquet(path)
 
 
@@ -56,7 +56,7 @@ def log_run_start(
     run_id = uuid.uuid4().hex
     row = [(run_id, storm, forecast_time, "IN_PROGRESS", None, None, None, None)]
     df = (
-        spark.createDataFrame(row, RUN_LOG_SCHEMA)
+        literal_frame(spark, row, RUN_LOG_SCHEMA)
         .withColumn("started_at", F.current_timestamp())
     )
     df.write.mode("append").parquet(_run_log_path(warehouse))
@@ -91,7 +91,7 @@ def log_run_complete(
         )
     ]
     df = (
-        spark.createDataFrame(row, RUN_LOG_SCHEMA)
+        literal_frame(spark, row, RUN_LOG_SCHEMA)
         .withColumn("finished_at", F.current_timestamp())
     )
     df.write.mode("append").parquet(_run_log_path(warehouse))
@@ -120,7 +120,8 @@ def signal_pipeline_complete(
 ) -> None:
     """Completion signal row (TC_PIPELINE_COMPLETE_LOG analog,
     main_pipeline.py:528-549) — downstream serving layers poll/stream this."""
-    df = spark.createDataFrame(
+    df = literal_frame(
+        spark,
         [(storm, forecast_time, time.time())],
         "storm STRING, forecast_time STRING, signal_epoch DOUBLE",
     )
@@ -150,11 +151,9 @@ def upsert_country(
     """Registry upsert (country_utils.py CRUD): tiny table, driver-side
     read-modify-write; MERGE on a Delta-capable warehouse."""
     cur = read_countries(spark, warehouse).filter(F.col("country") != country)
-    new = spark.createDataFrame(
-        [(country, active, zoom, initialized)], COUNTRY_SCHEMA
-    )
+    new = literal_frame(spark, [(country, active, zoom, initialized)], COUNTRY_SCHEMA)
     out = cur.unionByName(new).collect()
-    spark.createDataFrame(out, COUNTRY_SCHEMA).coalesce(1).write.mode(
+    literal_frame(spark, out, COUNTRY_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(_registry_path(warehouse))
 

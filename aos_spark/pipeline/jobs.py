@@ -39,6 +39,7 @@ import time
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aos_spark.io.local_frame import literal_frame
 from aos_spark.io.readers import read_sf_table
 from aos_spark.io.writers import write_view
 from aos_spark.ops import cci, probability, rollup, spatial_assign, windows
@@ -65,13 +66,13 @@ ZONES: list[tuple[int, float, float, float, float]] = [
 
 
 def zones_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ZONES, "zone_id INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE"
+    return literal_frame(
+        spark, ZONES, "zone_id INT, xmin DOUBLE, xmax DOUBLE, ymin DOUBLE, ymax DOUBLE"
     )
 
 
 def _thresholds_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in WIND_THRESHOLDS], "wind_threshold INT")
+    return literal_frame(spark, [(t,) for t in WIND_THRESHOLDS], "wind_threshold INT")
 
 
 def _tile_xy() -> tuple[Column, Column]:
@@ -253,8 +254,8 @@ def update(
     track segments → report JSON → run log.
     """
     t0 = time.time()
-    cand = spark.createDataFrame(
-        [(storm, forecast_time)], "storm STRING, forecast_time STRING"
+    cand = literal_frame(
+        spark, [(storm, forecast_time)], "storm STRING, forecast_time STRING"
     )
     if not rewrite:
         todo = new_work_antijoin(

@@ -232,3 +232,55 @@ def test_registry_roundtrip(spark, warehouse):
 def test_compact_time_helpers():
     assert assemble.previous_forecast("20240115060000") == "20240115000000"
     assert assemble.human_time("20251015120000") == "October 15, 2025 12:00 UTC"
+
+
+def test_update_failure_logs_error_and_reruns(spark, warehouse, monkeypatch):
+    """A view build that raises leaves a FAILURE terminal row carrying the
+    exception text verbatim (quotes, backslashes, newlines and ${…} are
+    data, not SQL) and the start row's started_at; the forecast is then
+    not SKIPPED on re-run."""
+    storm = "FAILSTORM"
+    msg = "it's a \\ back\nslash ${spark.sql.shuffle.partitions} " + "x" * 600
+
+    def boom(*args, **kwargs):
+        raise RuntimeError(msg)
+
+    with monkeypatch.context() as m:
+        m.setattr(jobs, "facility_probability", boom)
+        with pytest.raises(RuntimeError) as exc:
+            jobs.update(spark, SF_DIR, warehouse, storm, FC1)
+
+    rows = (
+        control.read_run_log(spark, warehouse)
+        .filter((F.col("storm") == storm) & (F.col("forecast_time") == FC1))
+        .collect()
+    )
+    start = [r for r in rows if r["status"] == "IN_PROGRESS"]
+    assert len(start) == 1 and len(rows) == 2
+    latest = control.latest_run_status(spark, warehouse).filter(
+        (F.col("storm") == storm) & (F.col("forecast_time") == FC1)
+    ).first()
+    assert latest["status"] == "FAILURE"
+    assert latest["run_id"] == start[0]["run_id"]
+    assert latest["error"] == str(exc.value)[:500]
+    assert latest["started_at"] == start[0]["started_at"]
+
+    assert jobs.update(spark, SF_DIR, warehouse, storm, FC1)["status"] == "SUCCESS"
+
+
+def test_lifecycle_builds_no_python_rdd_frames(spark, tmp_path, monkeypatch):
+    """initialize → update → re-delivery → rewrite → patch without a single
+    SparkSession.createDataFrame call: every driver-side frame on the
+    lifecycle path is a JVM LocalRelation (io.local_frame)."""
+    wh = str(tmp_path / "warehouse")
+    custom = spark.createDataFrame([(1, 5.0)], "tile_id BIGINT, value DOUBLE")
+
+    def no_python_rdd(*args, **kwargs):
+        raise AssertionError("createDataFrame on the lifecycle path")
+
+    monkeypatch.setattr(type(spark), "createDataFrame", no_python_rdd)
+    jobs.initialize(spark, SF_DIR, wh, country="AA")
+    assert jobs.update(spark, SF_DIR, wh, STORM, FC1)["status"] == "SUCCESS"
+    assert jobs.update(spark, SF_DIR, wh, STORM, FC1)["status"] == "SKIPPED"
+    assert jobs.update(spark, SF_DIR, wh, STORM, FC1, rewrite=True)["status"] == "SUCCESS"
+    jobs.patch(spark, wh, "AA", "population", custom)
